@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev profiler for the multi-job lifecycle queries (guide §1: measure
   * first). Runs one declared query and prints every Spark JOB it
-  * submitted — start offset, wall, and the driver call site — plus the
+  * submitted — start offset, wall, and the driver call site (its
+  * result stage's name) — plus the
   * gaps BETWEEN jobs (driver-side work: planning, filesystem walks,
   * parquet footer reads, commit renames). The slow index-lifecycle
   * gates are dozens of tiny jobs over kilobyte inputs, so the job/gap
@@ -34,8 +35,11 @@ object LifecycleProfile {
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val site = Option(js.properties)
-          .map(_.getProperty("callSite.short", "?")).getOrElse("?")
+        // the job's call site is its result stage's name: Spark sets
+        // `callSite.short` in the job properties only after an explicit
+        // setCallSite, so the properties carry no site for ordinary jobs
+        val site = js.stageInfos.sortBy(_.stageId).lastOption
+          .map(_.name).getOrElse("?")
         jobs.put(js.jobId, Job(js.jobId, js.time, site = site))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {

@@ -682,8 +682,7 @@ object SimilarityOps {
       else fs.listStatus(dir).toSeq.collect {
         case st if !st.isDirectory &&
             st.getPath.getName.startsWith("part-") =>
-          graft.sources.IndexCommits.Entry("vectors", Some(l),
-            st.getPath.toUri.getPath)
+          graft.sources.IndexCommits.entryOf("vectors", Some(l), st)
       }
     }
   }
@@ -724,7 +723,7 @@ object SimilarityOps {
         "ksub" -> "int", "qdec" -> "int", "n_vectors" -> "long",
         "id_checksum" -> "long"),
       Seq(Seq(k, iters, m, dsub, ksub, qdec, n, c)))
-  private def readAnnMeta(hconf: org.apache.hadoop.conf.Configuration,
+  private[graft] def readAnnMeta(hconf: org.apache.hadoop.conf.Configuration,
                           root: String): graft.sources.TinyParquet.TRow = {
     val rows = graft.sources.TinyParquet.read(hconf, s"$root/meta")
     require(rows.nonEmpty,
@@ -852,12 +851,13 @@ object SimilarityOps {
     *   `ann_index_append_buffered` / `ann_index_flush` gates share
     *   `ann_index_append`'s oracle).
     */
-  /** @param autoFlushSegments LSM flush policy for the buffered path:
-    *   when > 0 and the append log holds at least this many segment
-    *   files after the append, [[indexFlush]] runs inline — bounding
-    *   the log (whose union scan every search pays) without a manual
+  /** @param autoFlushSegments LSM flush policy, applied on both paths
+    *   (a direct append grows the same log as a buffered one): when
+    *   > 0 and the append log holds at least this many segment files
+    *   after the append, [[indexFlush]] runs inline — bounding the log
+    *   (whose union scan every search pays) without a manual
     *   maintenance trigger. 0 disables (flush stays a manual/cadence
-    *   decision). Ignored for direct appends.
+    *   decision).
     */
   def indexAppend(delta: DataFrame, idCol: String, vecCol: String,
                   root: String, buffered: Boolean = false,
@@ -907,8 +907,11 @@ object SimilarityOps {
             .filter(p => bloomFs.exists(new org.apache.hadoop.fs.Path(p)))
         val partDup =
           if (paths.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else spark.read.option("basePath", s"$root/vectors")
-            .parquet(paths: _*)
+          else (if (versioned)
+                  graft.sources.IndexCommits.scan(spark, root, snap,
+                    "vectors", Some(lists.toSet))
+                else spark.read.option("basePath", s"$root/vectors")
+                  .parquet(paths: _*))
             .select(col("vec_id").cast("long").as("vec_id"))
             .join(broadcast(sv.select("vec_id")), Seq("vec_id"),
               "left_semi")
@@ -923,7 +926,10 @@ object SimilarityOps {
           }
         val dup =
           if (partDup.nonEmpty || logFiles.isEmpty) partDup
-          else spark.read.parquet(logFiles: _*)
+          else (if (versioned)
+                  graft.sources.IndexCommits.scan(spark, root, snap,
+                    "applog")
+                else spark.read.parquet(logFiles: _*))
             .select(col("vec_id").cast("long").as("vec_id"))
             .join(broadcast(sv.select("vec_id")), Seq("vec_id"),
               "left_semi")
@@ -988,7 +994,7 @@ object SimilarityOps {
       val added = listApplog(spark, root).filterNot(e => before(e.file))
       graft.sources.IndexCommits.commit(spark, root, snap ++ added)
     }
-    if (buffered && autoFlushSegments > 0) {
+    if (autoFlushSegments > 0) {
       val segs =
         if (versioned)
           graft.sources.IndexCommits.filesOf(
@@ -1101,7 +1107,7 @@ object SimilarityOps {
     val snap = graft.sources.IndexCommits.readEntries(spark, root)
     val logFiles = graft.sources.IndexCommits.filesOf(snap, "applog")
     if (logFiles.isEmpty) return None
-    val log = spark.read.parquet(logFiles: _*)
+    val log = graft.sources.IndexCommits.scan(spark, root, snap, "applog")
     // the fold can only add files under the lists the log contains —
     // list those dirs alone (flush-cadence bounded), never the tree
     val touched = log.select("list_id").distinct().collect()
@@ -1150,7 +1156,9 @@ object SimilarityOps {
     val fresh =
       if (delFiles.isEmpty) batch
       else batch.join(
-        broadcast(spark.read.parquet(delFiles: _*)
+        broadcast((if (versioned)
+            graft.sources.IndexCommits.scan(spark, root, snap, "deletes")
+          else spark.read.parquet(delFiles: _*))
           .select(col("vec_id").as("_exid"))),
         col(idCol).cast("long") === col("_exid"), "left_anti")
     if (fresh.limit(1).isEmpty) return // every id already recorded
@@ -1309,7 +1317,7 @@ object SimilarityOps {
     if (delFiles.isEmpty) return None // nothing accrued: no-op
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val del = spark.read.parquet(delFiles: _*)
+    val del = IC.scan(spark, root, snap, "deletes")
     val delIds = del.select("vec_id").distinct()
     val haveAllLists = del.columns.contains("list_id") &&
       del.where(col("list_id").isNull).limit(1).isEmpty
@@ -1321,8 +1329,7 @@ object SimilarityOps {
           .distinct().collect().map(_.getLong(0))
       else if (allVecFiles.isEmpty) Array.empty[Long]
       else // legacy id-only rows: ONE discovery join, column-pruned
-        spark.read.option("basePath", s"$root/vectors")
-          .parquet(allVecFiles: _*)
+        IC.scan(spark, root, snap, "vectors")
           .join(broadcast(delIds), Seq("vec_id"))
           .select(col("list_id").cast("long"))
           .distinct().collect().map(_.getLong(0))
@@ -1335,8 +1342,7 @@ object SimilarityOps {
       fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // stale stage
       if (touchedFiles.nonEmpty)
         // survivors of the touched lists ONLY: snapshot-pruned scan
-        spark.read.option("basePath", s"$root/vectors")
-          .parquet(touchedFiles: _*)
+        IC.scan(spark, root, snap, "vectors", Some(touchedSet))
           .join(broadcast(delIds), Seq("vec_id"), "left_anti")
           .repartition(col("list_id")) // one file per rewritten list
           .write.mode("overwrite").partitionBy("list_id").parquet(tmp)
@@ -1364,7 +1370,7 @@ object SimilarityOps {
     val logFiles = IC.filesOf(snap, "applog")
     if (logFiles.nonEmpty) {
       val before = listApplog(spark, root).map(_.file).toSet
-      val survivors = spark.read.parquet(logFiles: _*)
+      val survivors = IC.scan(spark, root, snap, "applog")
         .join(broadcast(delIds), Seq("vec_id"), "left_anti")
       if (!survivors.limit(1).isEmpty)
         survivors.coalesce(1).write.mode("append")
@@ -1435,74 +1441,57 @@ object SimilarityOps {
         toDouble(col(vecCol)), cents, nProbe)).as("list_id"))
       .distinct().collect().map(_.getLong(0))
     // Plan the probed read from the current SNAPSHOT when the store is
-    // commit-versioned (one bounded commit read names every live file
-    // — no per-list existence probes, and staged/orphaned files from
-    // an interrupted maintenance op are invisible by construction).
+    // commit-versioned: IndexCommits.scan turns the probed lists'
+    // entries straight into the scan — recorded file statuses, partId
+    // partition values, one driver footer read for the schema — so
+    // there is no listing job, no schema-inference job and no
+    // per-list existence probe, and staged/orphaned files from an
+    // interrupted maintenance op are invisible by construction.
     // Legacy stores list ONLY the probed partition directories
     // (basePath recovers the list_id column): planning cost rides
-    // |probed lists|, never K — with K=1600 lists the full-store
-    // InMemoryFileIndex listing cost more than the data read (100x
-    // rehearsal). A probed list with no vectors has no directory /
-    // no snapshot entry; skipping it is exactly the empty-list
-    // semantics of the isin scan.
+    // |probed lists|, never K. A probed list with no vectors has no
+    // directory / no snapshot entry; skipping it is exactly the
+    // empty-list semantics of the isin scan.
+    val IC = graft.sources.IndexCommits
     val vecBase = s"$root/vectors"
-    val snap = graft.sources.IndexCommits.readEntries(spark, root)
+    val snap = IC.readEntries(spark, root)
     val versioned = snap.nonEmpty
-    val probedPaths =
+    val hconf = spark.sparkContext.hadoopConfiguration
+    // a served kind's frame: snapshot-planned, or the legacy dir
+    def served(kind: String): Option[DataFrame] =
       if (versioned)
-        graft.sources.IndexCommits.filesOfParts(snap, "vectors",
-          probed.toSet)
+        Option.when(IC.filesOf(snap, kind).nonEmpty)(
+          IC.scan(spark, root, snap, kind))
       else {
-        val fsV = new org.apache.hadoop.fs.Path(vecBase).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        probed.toSeq.map(l => s"$vecBase/list_id=$l")
+        val p = new org.apache.hadoop.fs.Path(s"$root/$kind")
+        Option.when(p.getFileSystem(hconf).exists(p))(
+          spark.read.parquet(p.toString))
+      }
+    val main =
+      if (versioned) IC.scan(spark, root, snap, "vectors", Some(probed.toSet))
+      else {
+        val fsV = new org.apache.hadoop.fs.Path(vecBase).getFileSystem(hconf)
+        val probedPaths = probed.toSeq.map(l => s"$vecBase/list_id=$l")
           .filter(p => fsV.exists(new org.apache.hadoop.fs.Path(p)))
+        if (probedPaths.isEmpty) spark.read.parquet(vecBase).where(lit(false))
+        else spark.read.option("basePath", vecBase).parquet(probedPaths: _*)
       }
-    val codedMain =
-      (if (probedPaths.isEmpty)
-         spark.read.parquet(vecBase).where(lit(false))
-       else
-         spark.read.option("basePath", vecBase).parquet(probedPaths: _*))
-        .select(col("vec_id").as("neighbor_id"),
-          col("list_id").cast("long").as("list_id"), col("codes"))
+    val codedMain = main.select(col("vec_id").as("neighbor_id"),
+      col("list_id").cast("long").as("list_id"), col("codes"))
     // unflushed LSM segments: same probe filter as a plain column —
-    // parquet min/max row-group stats prune it; the log is bounded by
-    // the flush cadence, never corpus-sized
-    val logFiles =
-      if (versioned) graft.sources.IndexCommits.filesOf(snap, "applog")
-      else {
-        val logPath = new org.apache.hadoop.fs.Path(s"$root/applog")
-        if (logPath.getFileSystem(
-            spark.sparkContext.hadoopConfiguration).exists(logPath))
-          Seq(s"$root/applog")
-        else Seq.empty
-      }
-    val coded0 =
-      if (logFiles.nonEmpty)
-        codedMain.unionByName(
-          spark.read.parquet(logFiles: _*)
-            .where(col("list_id").isin(probed: _*))
-            .select(col("vec_id").as("neighbor_id"),
-              col("list_id").cast("long").as("list_id"), col("codes")))
-      else codedMain
+    // parquet min/max row-group stats prune it. The log is bounded only
+    // by a flush policy — autoFlushSegments on either append path, or
+    // indexMaintain on a cadence; with neither it grows per append
+    val coded0 = served("applog").fold(codedMain)(log =>
+      codedMain.unionByName(log
+        .where(col("list_id").isin(probed: _*))
+        .select(col("vec_id").as("neighbor_id"),
+          col("list_id").cast("long").as("list_id"), col("codes"))))
     // serve base minus deletes: one anti-join against the (small)
     // delete sidecar when one exists — the index's merge-on-read
-    val delFiles =
-      if (versioned) graft.sources.IndexCommits.filesOf(snap, "deletes")
-      else {
-        val delPath = new org.apache.hadoop.fs.Path(s"$root/deletes")
-        if (delPath.getFileSystem(
-            spark.sparkContext.hadoopConfiguration).exists(delPath))
-          Seq(s"$root/deletes")
-        else Seq.empty
-      }
-    val coded =
-      if (delFiles.nonEmpty)
-        coded0.join(
-          spark.read.parquet(delFiles: _*)
-            .select(col("vec_id").as("neighbor_id")),
-          Seq("neighbor_id"), "left_anti")
-      else coded0
+    val coded = served("deletes").fold(coded0)(del =>
+      coded0.join(del.select(col("vec_id").as("neighbor_id")),
+        Seq("neighbor_id"), "left_anti"))
     ivfPqScore(queries, coded, qId, vecCol, k, cents, cb, nProbe, qdec)
   }
 

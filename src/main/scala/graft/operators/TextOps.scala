@@ -1771,7 +1771,7 @@ object TextOps {
       if (nDocBuckets > 0) base :+ ("n_docbuckets" -> "int") else base,
       Seq(if (nDocBuckets > 0) row :+ nDocBuckets else row))
   }
-  private def readBmMeta(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def readBmMeta(spark: org.apache.spark.sql.SparkSession,
                          root: String): graft.sources.TinyParquet.TRow = {
     val rows = graft.sources.TinyParquet.read(
       spark.sparkContext.hadoopConfiguration, s"$root/meta")
@@ -1873,6 +1873,9 @@ object TextOps {
                     fs.exists(new org.apache.hadoop.fs.Path(p)))
               }
             if (files.isEmpty) None
+            else if (versioned)
+              Some(graft.sources.IndexCommits.scan(spark, root, snap,
+                "doclens", Some(bkts)))
             else Some(spark.read.option("basePath", s"$root/doclens")
               .parquet(files: _*))
           } else Some(spark.read.parquet(s"$root/doclens"))
@@ -1989,29 +1992,37 @@ object TextOps {
     val ids =
       if (delFiles.isEmpty) batch
       else batch.join(
-        broadcast(spark.read.parquet(delFiles: _*).select("doc_id")),
+        broadcast((if (versioned)
+            graft.sources.IndexCommits.scan(spark, root, snap, "deletes")
+          else spark.read.parquet(delFiles: _*)).select("doc_id")),
         Seq("doc_id"), "left_anti")
     if (ids.limit(1).isEmpty) return // every id already recorded
     // census from the STORED doclens of the doomed ids (inner join:
     // never-indexed ids are ignored, not subtracted) — read pruned to
     // the doomed ids' `docbucket=` partitions when the layout has them
-    val lensFiles =
-      if (nDocBuckets > 0) {
-        val bkts = ids.select(docBucket(col("doc_id"), nDocBuckets)
+    val bkts: Option[Set[Long]] =
+      if (nDocBuckets > 0)
+        Some(ids.select(docBucket(col("doc_id"), nDocBuckets)
             .cast("long").as("b"))
-          .distinct().collect().map(_.getLong(0)).toSet
+          .distinct().collect().map(_.getLong(0)).toSet)
+      else None
+    val lensFiles = bkts match {
+      case Some(bs) =>
         if (versioned)
-          graft.sources.IndexCommits.filesOfParts(snap, "doclens", bkts)
+          graft.sources.IndexCommits.filesOfParts(snap, "doclens", bs)
         else {
           val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
             spark.sparkContext.hadoopConfiguration)
-          bkts.toSeq.map(b => s"$root/doclens/docbucket=$b")
+          bs.toSeq.map(b => s"$root/doclens/docbucket=$b")
             .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
         }
-      } else Seq(s"$root/doclens")
+      case None => Seq(s"$root/doclens")
+    }
     val m =
       (if (lensFiles.isEmpty) // nothing indexed in those buckets
          ids.select(col("doc_id"), lit(0).as("dl")).where(lit(false))
+       else if (versioned)
+         graft.sources.IndexCommits.scan(spark, root, snap, "doclens", bkts)
        else if (nDocBuckets > 0)
          spark.read.option("basePath", s"$root/doclens")
            .parquet(lensFiles: _*)
@@ -2120,15 +2131,14 @@ object TextOps {
         // doc_id becomes legally re-appendable; a crash between swap
         // and rebuild leaves the bloom over-approximate — the safe
         // direction, since suspects arbitrate exactly)
-        val lensFiles =
-          graft.sources.IndexCommits.filesOf(next, "doclens")
-        val survivors =
-          if (lensFiles.isEmpty)
-            spark.read.parquet(s"$root/doclens").where(lit(false))
-          else spark.read.option("basePath", s"$root/doclens")
-            .parquet(lensFiles: _*)
-        graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
-          dupBloomWords(survivors.select("doc_id"), "doc_id"))
+        if (graft.sources.IndexCommits.filesOf(next, "doclens").isEmpty)
+          // every document deleted: the survivors' bloom is empty
+          graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
+            Seq.empty[(Long, Long)])
+        else
+          graft.sources.IoOps.writeBloomSidecar(spark, s"$root/bloomidx",
+            dupBloomWords(graft.sources.IndexCommits.scan(spark, root,
+              next, "doclens").select("doc_id"), "doc_id"))
         graft.sources.IndexCommits.vacuumConf(spark, root, BmSubs)
       }
       return
@@ -2199,7 +2209,7 @@ object TextOps {
     if (delFiles.isEmpty) return None // nothing accrued: no-op
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = spark.read.parquet(delFiles: _*)
+    val ids = IC.scan(spark, root, snap, "deletes")
       .select("doc_id").distinct()
     val tmp = s"$root/.compact"
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true) // stale stage
@@ -2211,10 +2221,8 @@ object TextOps {
     def stageSurvivors(kind: String, partKey: String,
                        touched: Set[Long]): Unit = {
       if (touched.isEmpty) return
-      val files = IC.filesOfParts(snap, kind, touched)
-      if (files.nonEmpty)
-        spark.read.option("basePath", s"$root/$kind")
-          .parquet(files: _*)
+      if (IC.filesOfParts(snap, kind, touched).nonEmpty)
+        IC.scan(spark, root, snap, kind, Some(touched))
           .join(broadcast(ids), Seq("doc_id"), "left_anti")
           .repartition(col(partKey)) // one file per rewritten part
           .write.mode("overwrite").option("compression", "zstd")
@@ -2237,8 +2245,7 @@ object TextOps {
     val postFiles = IC.filesOf(snap, "postings")
     val touchedBuckets: Set[Long] =
       if (postFiles.isEmpty) Set.empty
-      else spark.read.option("basePath", s"$root/postings")
-        .parquet(postFiles: _*)
+      else IC.scan(spark, root, snap, "postings")
         .join(broadcast(ids), Seq("doc_id"))
         .select(col("bucket").cast("long"))
         .distinct().collect().map(_.getLong(0)).toSet
@@ -2283,13 +2290,8 @@ object TextOps {
     val snap = IC.readEntries(spark, root)
     val versioned = snap.nonEmpty
     val base =
-      if (versioned) {
-        val files = IC.filesOfParts(snap, "postings", buckets.toSet)
-        if (files.isEmpty)
-          spark.read.parquet(s"$root/postings").where(lit(false))
-        else spark.read.option("basePath", s"$root/postings")
-          .parquet(files: _*)
-      } else spark.read.parquet(s"$root/postings")
+      if (versioned) IC.scan(spark, root, snap, "postings", Some(buckets.toSet))
+      else spark.read.parquet(s"$root/postings")
     val probed = base.where(col("bucket").isin(buckets: _*) &&
       col("term").isin(terms: _*))
     val withDl =
@@ -2309,7 +2311,8 @@ object TextOps {
     // small and broadcasts)
     if (delFiles.nonEmpty)
       withDl.join(
-        broadcast(spark.read.parquet(delFiles: _*).select("doc_id")),
+        broadcast((if (versioned) IC.scan(spark, root, snap, "deletes")
+          else spark.read.parquet(delFiles: _*)).select("doc_id")),
         Seq("doc_id"), "left_anti")
     else withDl
   }

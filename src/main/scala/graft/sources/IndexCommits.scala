@@ -1,7 +1,17 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types._
 
 /** Versioned commit protocol for the persisted retrieval indexes —
   * the same snapshot-pointer discipline the lakehouse ops already
@@ -11,11 +21,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * crash-safe:
   *
   *   root/commits/v=N/   one parquet snapshot per committed version:
-  *     rows (kind, part_id, file) naming EVERY live data file of the
-  *     served kinds ("vectors"/"applog"/"deletes" for ANN;
-  *     "postings"/"doclens"/"deletes" for BM25). The CURRENT snapshot
-  *     is the max committed N; readers plan their file lists from it
-  *     and never trust directory listings.
+  *     rows (kind, part_id, file, len, mtime) naming EVERY live data
+  *     file of the served kinds ("vectors"/"applog"/"deletes" for ANN;
+  *     "postings"/"doclens"/"deletes" for BM25) with the length and
+  *     modification time its writer's listing saw. The CURRENT
+  *     snapshot is the max committed N; readers plan from it and never
+  *     trust directory listings.
+  *
+  * Reads ([[scan]]) are planned from the snapshot alone: the file
+  * statuses, the partition values and the schema (one footer, read on
+  * the driver) all come from the entries, so a store read runs no
+  * listing job, no schema-inference job and no per-file filesystem
+  * call — what a store read costs is decided here, not at each of the
+  * read sites in SimilarityOps / TextOps.
   *
   * Mutation protocol (append / flush / compact / delete):
   *   1. write NEW files only — nothing referenced by the current
@@ -40,18 +58,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Single-writer by design (one maintenance job per index store, the
   * standard lakehouse assumption); readers are never blocked. The
   * census/quantizer sidecars (meta, bloomidx, centroids, codebooks)
-  * stay plain directories: they are advisory/bounded and their
-  * in-place overwrite windows are guarded by the staleness census,
-  * never by served data.
+  * stay plain directories: they are advisory/bounded, and a crash
+  * mid-rewrite leaves at most a superseded generation beside the new
+  * one, which TinyParquet.read ignores.
   */
 object IndexCommits {
   /** One live data file of a snapshot. partId = the value of the
     * store's partition key for files under a `key=value` directory
     * (list_id for ANN vectors, bucket for BM25 postings, docbucket
     * for doclens), None for unpartitioned kinds (applog segments,
-    * delete sidecars).
+    * delete sidecars). `len` and `mtime` are the file's length and
+    * modification time as recorded at commit; -1 for an entry read
+    * from a snapshot written before they were recorded (its reads stat
+    * the file once, and the next commit records them).
     */
-  final case class Entry(kind: String, partId: Option[Long], file: String)
+  final case class Entry(kind: String, partId: Option[Long], file: String,
+                         len: Long = -1L, mtime: Long = -1L)
+
+  /** The entry for a listed data file, length and mtime included. */
+  def entryOf(kind: String, partId: Option[Long], st: FileStatus): Entry =
+    Entry(kind, partId, st.getPath.toUri.getPath, st.getLen,
+      st.getModificationTime)
 
   private def hfs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -94,9 +121,13 @@ object IndexCommits {
         // spent most of their wall on exactly these tiny jobs)
         TinyParquet.read(spark.sparkContext.hadoopConfiguration,
             s"$root/commits/v=$v")
-          .map(r => Entry(r.getString("kind"),
-            if (r.isNullAt("part_id")) None else Some(r.getLong("part_id")),
-            r.getString("file")))
+          .map { r =>
+            def opt(c: String) =
+              if (r.has(c) && !r.isNullAt(c)) r.getLong(c) else -1L
+            Entry(r.getString("kind"),
+              if (r.isNullAt("part_id")) None else Some(r.getLong("part_id")),
+              r.getString("file"), opt("len"), opt("mtime"))
+          }
     }
 
   /** Commit the next snapshot: ONE atomic rename makes it current.
@@ -114,10 +145,17 @@ object IndexCommits {
     val next = versions(fs, root).lastOption.getOrElse(0L) + 1
     val tmp = s"$root/commits/.tmp-$next-${java.util.UUID.randomUUID()}"
     // the snapshot is a driver-side Seq already — write it on the
-    // driver (same parquet layout, no Spark job / output committer)
+    // driver (same parquet layout, no Spark job / output committer).
+    // Entries carried over from a snapshot that predates recorded
+    // lengths are stat'ed here, once, so later reads need no stat.
     TinyParquet.write(spark.sparkContext.hadoopConfiguration, tmp,
-      Seq("kind" -> "string", "part_id" -> "long", "file" -> "string"),
-      entries.map(e => Seq(e.kind, e.partId.map(Long.box).orNull, e.file)))
+      Seq("kind" -> "string", "part_id" -> "long", "file" -> "string",
+        "len" -> "long", "mtime" -> "long"),
+      entries.map { e =>
+        val st = statusOf(fs, e)
+        Seq(e.kind, e.partId.map(Long.box).orNull, e.file, st.getLen,
+          st.getModificationTime)
+      })
     val ok = fs.rename(new Path(tmp), new Path(s"$root/commits/v=$next"))
     require(ok, s"commit v=$next failed: concurrent writer on $root?")
     next
@@ -137,6 +175,116 @@ object IndexCommits {
 
   def partIdsOf(entries: Seq[Entry], kind: String): Set[Long] =
     entries.filter(_.kind == kind).flatMap(_.partId).toSet
+
+  /** The qualified status of an entry's file: built from the recorded
+    * length and mtime, or one `getFileStatus` for an entry that has
+    * none (a snapshot written before they were recorded).
+    */
+  private def statusOf(fs: FileSystem, e: Entry): FileStatus =
+    if (e.len >= 0)
+      new FileStatus(e.len, false, 0, 0L, e.mtime,
+        fs.makeQualified(new Path(e.file)))
+    else fs.getFileStatus(new Path(e.file))
+
+  /** Leaf-file cache pre-filled with the snapshot's statuses: every
+    * root path of the index is one of these files, so the index never
+    * lists. Snapshot files are immutable, so there is nothing to
+    * invalidate.
+    */
+  private final class SnapshotStatusCache(files: Seq[FileStatus])
+      extends FileStatusCache {
+    private val byPath = files.map(st => st.getPath -> Array(st)).toMap
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+      byPath.get(path)
+    override def putLeafFiles(path: Path, f: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = ()
+  }
+
+  /** Spark's file sources serve the data schema nullable whatever the
+    * footer says; [[scan]] does the same.
+    */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), true)
+    case m: MapType =>
+      MapType(asNullable(m.keyType), asNullable(m.valueType), true)
+    case other => other
+  }
+
+  /** A file's Spark schema from its footer, read on the driver — the
+    * same footer and conversion Spark's schema-inference job uses,
+    * without the job.
+    */
+  private def footerSchema(spark: SparkSession, conf: Configuration,
+                           st: FileStatus): StructType = {
+    val meta = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(st, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val sqlConf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, meta),
+      new ParquetToSparkSchemaConverter(sqlConf))
+  }
+
+  /** The files of `kind` (only those whose partId is in `parts`, when
+    * given) as a DataFrame planned from the snapshot alone — the one
+    * way every versioned store read is planned:
+    *
+    *   - file statuses come from the entries (recorded length and
+    *     mtime) through a pre-filled FileStatusCache: no listing job,
+    *     no per-file stat;
+    *   - the partition spec comes from each entry's partId, the column
+    *     named by its `key=value` directory and typed int (long past
+    *     the int range — what partition inference gives), appended
+    *     last;
+    *   - the data schema is the first file's footer, made nullable —
+    *     the single footer Spark's inference job would read, read on
+    *     the driver with no job.
+    *
+    * An empty selection is an empty frame of the kind's schema (taken
+    * from any of the kind's files); the kind's directory is never
+    * listed. A snapshot file that is missing fails the read.
+    */
+  def scan(spark: SparkSession, root: String, entries: Seq[Entry],
+           kind: String, parts: Option[Set[Long]] = None): DataFrame = {
+    val all = entries.filter(_.kind == kind)
+    require(all.nonEmpty,
+      s"IndexCommits.scan: the snapshot of $root has no $kind files")
+    val sel = parts.fold(all)(ps => all.filter(_.partId.exists(ps.contains)))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = hfs(spark, root)
+    val statuses = sel.map(statusOf(fs, _))
+    val fileSchema = footerSchema(spark, conf,
+      statuses.headOption.getOrElse(statusOf(fs, all.head)))
+    val partKey = all.head.partId.map { _ =>
+      val dir = new Path(all.head.file).getParent.getName
+      require(dir.contains("="),
+        s"IndexCommits.scan: ${all.head.file} is not under a key=value dir")
+      dir.takeWhile(_ != '=')
+    }
+    val intParts = sel.forall(_.partId.forall(p => p.isValidInt))
+    val partSchema = StructType(partKey.toSeq.map(k =>
+      StructField(k, if (intParts) IntegerType else LongType)))
+    val dataSchema = asNullable(StructType(
+      fileSchema.filterNot(f => partKey.contains(f.name))))
+      .asInstanceOf[StructType]
+    if (sel.isEmpty)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(dataSchema ++ partSchema))
+    val spec =
+      if (partKey.isEmpty) PartitionSpec.emptySpec
+      else PartitionSpec(partSchema,
+        sel.zip(statuses).groupBy(_._2.getPath.getParent).toSeq.map {
+          case (dir, es) =>
+            val v = es.head._1.partId.get
+            PartitionPath(InternalRow(if (intParts) v.toInt else v), dir)
+        })
+    val index = new InMemoryFileIndex(spark, statuses.map(_.getPath),
+      Map.empty, None, new SnapshotStatusCache(statuses), Some(spec), None)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
 
   /** Recursively list the DATA files (part-*) under root/<sub>,
     * parsing partId from a `partKey=value` path segment when given.
@@ -160,7 +308,7 @@ object IndexCommits {
           }
           walk(st.getPath, nextPart)
         } else if (name.startsWith("part-"))
-          Seq(Entry(kind, part, st.getPath.toUri.getPath))
+          Seq(entryOf(kind, part, st))
         else Seq.empty
       }
     walk(dir, None)

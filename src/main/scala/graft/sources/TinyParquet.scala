@@ -49,26 +49,64 @@ object TinyParquet {
     b.named("spark_schema")
   }
 
+  /** Generation of a sidecar part file: `part-g<N>-...` names carry
+    * it; any other part-* name (Spark-written, or written before
+    * generations were recorded) is generation 0.
+    */
+  private val GenName = "part-g(\\d+)-.*".r
+  private def generation(name: String): Long = name match {
+    case GenName(g) => g.toLong
+    case _          => 0L
+  }
+
+  /** The readable part files of a sidecar dir: the non-empty part-*
+    * files of its NEWEST generation only. A crash between [[write]]'s
+    * publish rename and its delete leaves the superseded generation
+    * beside the new one; it is never read, and the next write removes
+    * it.
+    */
+  private def liveParts(fs: FileSystem, dir: Path): Seq[Path] = {
+    val parts = fs.listStatus(dir).toSeq.filter(st => !st.isDirectory &&
+      st.getPath.getName.startsWith("part-") && st.getLen > 0)
+    if (parts.isEmpty) Seq.empty
+    else {
+      val newest = parts.map(st => generation(st.getPath.getName)).max
+      parts.filter(st => generation(st.getPath.getName) == newest)
+        .map(_.getPath)
+    }
+  }
+
   /** Write `rows` as ONE parquet data file under `dir` (created if
-    * needed; prior part files replaced when `overwrite`). The file is
-    * named part-* so the index stores' data-file discovery and vacuum
-    * conventions apply unchanged.
+    * needed), replacing its prior part files. The file is named
+    * `part-g<N>-*`, one generation above the newest already there, so
+    * the index stores' part-* discovery and vacuum conventions apply
+    * unchanged and [[read]] can tell the generations apart.
     *
     * Rename discipline (not delete-dir-then-write): the file is built
     * under a dot-prefixed temp name (invisible to the part-* read
     * filter), renamed into place fully formed, and only THEN are the
     * superseded part files removed — so a concurrent reader or a crash
     * mid-write can never observe a missing dir or a torn (footerless)
-    * parquet file, mirroring IndexCommits.commit's staging rename.
+    * parquet file, mirroring IndexCommits.commit's staging rename. A
+    * crash before the delete leaves two generations, and readers take
+    * the newer.
     */
   def write(conf: Configuration, dir: String,
-            fields: Seq[(String, String)], rows: Seq[Seq[Any]],
-            overwrite: Boolean = true): Unit = {
+            fields: Seq[(String, String)], rows: Seq[Seq[Any]]): Unit = {
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf)
     fs.mkdirs(dirPath)
+    // superseded part files, plus any stale .tmp a crashed writer left
+    // (both invisible to readers once the rename lands)
+    val old = fs.listStatus(dirPath).toSeq.filter { st =>
+      val n = st.getPath.getName
+      !st.isDirectory &&
+        (n.startsWith("part-") || (n.startsWith(".part-") && n.endsWith(".tmp")))
+    }
+    val gen = old.map(_.getPath.getName).filter(_.startsWith("part-"))
+      .map(generation).maxOption.getOrElse(0L) + 1
     val schema = schemaOf(fields)
-    val name = s"part-00000-${java.util.UUID.randomUUID()}.parquet"
+    val name = s"part-g$gen-${java.util.UUID.randomUUID()}.parquet"
     val tmp = new Path(dirPath, s".$name.tmp")
     val writer = ExampleParquetWriter.builder(tmp)
       .withType(schema).withConf(conf).build()
@@ -86,19 +124,9 @@ object TinyParquet {
       }
       writer.write(g)
     } finally writer.close()
-    val old =
-      if (!overwrite) Array.empty[Path]
-      else fs.listStatus(dirPath).collect {
-        // superseded part files, plus any stale .tmp a crashed writer
-        // left (both invisible to readers once the rename lands)
-        case st if !st.isDirectory && st.getPath != tmp &&
-            (st.getPath.getName.startsWith("part-") ||
-              (st.getPath.getName.startsWith(".part-") &&
-                st.getPath.getName.endsWith(".tmp"))) => st.getPath
-      }
     require(fs.rename(tmp, new Path(dirPath, name)),
       s"TinyParquet: publish rename failed for $tmp")
-    old.foreach(p => fs.delete(p, false))
+    old.foreach(st => fs.delete(st.getPath, false))
   }
 
   /** One row of a tiny sidecar, with Row-like typed getters. */
@@ -115,24 +143,18 @@ object TinyParquet {
       vals(idx(name)).asInstanceOf[String]
   }
 
-  /** Read every part-* data file under `dir` (or `dir` itself when it
-    * is a file). Column set is taken from the first file's schema;
-    * physical int32/int64/double/binary-UTF8/boolean map to
-    * Int/Long/Double/String/Boolean. Returns empty when the directory
-    * does not exist.
+  /** Read the newest generation's part-* data files under `dir` (or
+    * `dir` itself when it is a file). Column set is taken from the
+    * first file's schema; physical int32/int64/double/binary-UTF8/
+    * boolean map to Int/Long/Double/String/Boolean. Returns empty when
+    * the directory does not exist.
     */
   def read(conf: Configuration, dir: String): Seq[TRow] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return Seq.empty
     val files: Seq[Path] =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq
-          .filter(st => !st.isDirectory &&
-            st.getPath.getName.startsWith("part-") &&
-            st.getLen > 0)
-          .map(_.getPath)
-      else Seq(p)
+      if (fs.getFileStatus(p).isDirectory) liveParts(fs, p) else Seq(p)
     files.flatMap(f => readFile(conf, f))
   }
 
@@ -147,11 +169,7 @@ object TinyParquet {
       if (!fs.exists(p)) 0L
       else {
         val files: Seq[Path] =
-          if (fs.getFileStatus(p).isDirectory)
-            fs.listStatus(p).toSeq
-              .filter(st => !st.isDirectory &&
-                st.getPath.getName.startsWith("part-") && st.getLen > 0)
-              .map(_.getPath)
+          if (fs.getFileStatus(p).isDirectory) liveParts(fs, p)
           else Seq(p)
         files.map { f =>
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.sources.IndexCommits
+import graft.sources.{IndexCommits, TinyParquet}
 
 /** The round-18 crash-safety surface: both persisted index stores
   * (ANN — SimilarityOps, BM25 — TextOps) mutate through versioned
@@ -277,6 +277,74 @@ class IndexCommitSpec extends SparkSpec {
     assert(dataFiles(root, Seq("vectors", "applog", "deletes")) === live)
     val cd = commitDirs(root)
     assert(cd.count(_.startsWith("v=")) === 1, cd.mkString(","))
+  }
+
+  /** The part files of a sidecar dir, name -> bytes. */
+  private def sidecarFiles(dir: String): Map[String, Array[Byte]] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(_.getName.startsWith("part-"))
+      .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath))
+      .toMap
+
+  /** Put sidecar files back beside the current ones — the state a
+    * crash between TinyParquet's publish rename and its delete leaves.
+    */
+  private def restore(dir: String, files: Map[String, Array[Byte]],
+                      rename: String => String = identity): Unit =
+    files.foreach { case (name, bytes) =>
+      java.nio.file.Files.write(
+        new java.io.File(dir, rename(name)).toPath, bytes)
+    }
+
+  test("sidecar generations: a superseded generation left beside the" +
+      " current one (crash between publish and delete) is never read") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val root = java.nio.file.Files.createTempDirectory("graft_icg")
+      .toString + "/idx"
+    val vecs = annVecs
+    SimilarityOps.indexWrite(vecs.where(col("vec_id") < 20), "vec_id",
+      "embedding", root, k = 2, iters = 2, m = 8, dsub = 8, ksub = 4)
+    val oldMeta = sidecarFiles(s"$root/meta")
+    val oldCents = sidecarFiles(s"$root/centroids")
+    assert(oldMeta.keys.forall(_.startsWith("part-g1-")), oldMeta.keys)
+    // rebuild: every sidecar moves to generation 2
+    SimilarityOps.indexWrite(vecs, "vec_id", "embedding", root,
+      k = 3, iters = 2, m = 8, dsub = 8, ksub = 4)
+    val cents = SimilarityOps.readIndexCentroids(spark, root)
+    assert(cents.size === 3)
+    assert(sidecarFiles(s"$root/meta").keys.forall(_.startsWith("part-g2-")))
+    // the crashed-delete state: generation 1 back, plus an old-style
+    // (generation 0) name
+    restore(s"$root/meta", oldMeta)
+    restore(s"$root/centroids", oldCents)
+    restore(s"$root/centroids", oldCents,
+      n => "part-00000-" + n.stripPrefix("part-g1-"))
+    assert(TinyParquet.read(hconf, s"$root/meta").size === 1)
+    val meta = SimilarityOps.readAnnMeta(hconf, root)
+    assert(meta.getInt("k") === 3 && meta.getLong("n_vectors") === 40L)
+    val reread = SimilarityOps.readIndexCentroids(spark, root)
+    assert(reread.map(_._1) === cents.map(_._1))
+    assert(reread.map(_._2.toSeq) === cents.map(_._2.toSeq))
+    // the next write supersedes every older generation
+    SimilarityOps.indexAppend(annVecs.select((col("vec_id") + 100L)
+      .as("vec_id"), col("embedding")).where(col("vec_id") < 102),
+      "vec_id", "embedding", root)
+    val names = sidecarFiles(s"$root/meta").keys
+    assert(names.size === 1 && names.head.startsWith("part-g3-"), names)
+    assert(SimilarityOps.readAnnMeta(hconf, root)
+      .getLong("n_vectors") === 42L)
+    // BM25 meta
+    val bm = java.nio.file.Files.createTempDirectory("graft_icgb")
+      .toString + "/idx"
+    TextOps.invertedIndexWrite(bmCorpus, "doc_id", "text", bm,
+      nBuckets = 16)
+    val oldBm = sidecarFiles(s"$bm/meta")
+    TextOps.invertedIndexDelete(bmCorpus.where(col("doc_id") === 4),
+      "doc_id", bm)
+    restore(s"$bm/meta", oldBm)
+    assert(new java.io.File(s"$bm/meta").listFiles()
+      .count(_.getName.startsWith("part-")) === 2)
+    assert(TextOps.readBmMeta(spark, bm).getLong("n_docs") === 6L)
   }
 
   test("BM25 append dup-arbitration reads only the suspects'" +

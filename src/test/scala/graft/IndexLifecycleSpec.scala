@@ -230,6 +230,38 @@ class IndexLifecycleSpec extends SparkSpec {
       "vec_id", "embedding", root2, buffered = true)
   }
 
+  test("autoFlushSegments applies to direct appends: two direct" +
+      " appends with autoFlushSegments = 2 leave no applog entries and" +
+      " serve the same rows") {
+    val vecs = annVecs
+    // even ids share one coarse list: each delta writes one segment
+    val d1 = vecs.where(col("vec_id") >= 20 && col("vec_id") < 30 &&
+      col("vec_id") % 2 === 0)
+    val d2 = vecs.where(col("vec_id") >= 30 && col("vec_id") % 2 === 0)
+    def build(tag: String, policy: Int): String = {
+      val root = java.nio.file.Files.createTempDirectory(tag)
+        .toString + "/idx"
+      SimilarityOps.indexWrite(vecs.where(col("vec_id") < 20),
+        "vec_id", "embedding", root, k = 2, iters = 2, m = 8, dsub = 8,
+        ksub = 4)
+      Seq(d1, d2).foreach(d => SimilarityOps.indexAppend(d, "vec_id",
+        "embedding", root, autoFlushSegments = policy))
+      root
+    }
+    def logSegs(root: String): Int =
+      graft.sources.IndexCommits.filesOf(
+        graft.sources.IndexCommits.readEntries(spark, root), "applog").size
+    val plain = build("graft_afd0", 0)
+    assert(logSegs(plain) === 2) // no policy: the log keeps both
+    val flushed = build("graft_afd1", 2)
+    assert(logSegs(flushed) === 0)
+    val queries = vecs.where(col("vec_id") < 4)
+    assert(SimilarityOps.indexSearch(queries, flushed, "vec_id",
+      "embedding", k = 3, nProbe = 2).collect().toSeq ===
+      SimilarityOps.indexSearch(queries, plain, "vec_id",
+        "embedding", k = 3, nProbe = 2).collect().toSeq)
+  }
+
   private def bmCorpus = Seq(
     (0L, "spark joins data with hash joins"),
     (1L, "hash tables back the join"),

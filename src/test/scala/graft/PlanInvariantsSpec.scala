@@ -452,4 +452,86 @@ class PlanInvariantsSpec extends SparkSpec {
       !p.substring(p.indexOf("ReadSchema")).takeWhile(_ != '\n').contains("l_comment"),
       s"column pruning lost — scan reads unprojected columns:\n$p")
   }
+
+  private def fileScans(df: DataFrame, sub: String)
+    : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    df.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths.exists(
+            _.toString.contains(s"/$sub/")) => f
+    }
+
+  private def scanFiles(f: org.apache.spark.sql.execution.FileSourceScanExec)
+    : Set[String] =
+    f.relation.location.rootPaths.map(_.toUri.getPath).toSet
+
+  test("snapshot-planned ANN search prunes: a probed search over a store" +
+      " with unflushed direct segments reads only the probed lists'" +
+      " files and pushes In(list_id, ...) to the applog scan") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val IC = graft.sources.IndexCommits
+    // four well-separated groups: four populated coarse lists
+    val vecs = (0 until 48).map { i =>
+      val base = (i % 4) * 10.0f
+      (i.toLong, Array.tabulate(16)(d => base + (i / 4) * 0.01f + d * 0.001f))
+    }.toDF("vec_id", "embedding")
+    val root = java.nio.file.Files.createTempDirectory("graft_pi_ann")
+      .toString + "/idx"
+    graft.operators.SimilarityOps.indexWrite(vecs.where(col("vec_id") < 32),
+      "vec_id", "embedding", root, k = 4, iters = 3, m = 4, dsub = 4,
+      ksub = 4)
+    graft.operators.SimilarityOps.indexAppend(
+      vecs.where(col("vec_id") >= 32), "vec_id", "embedding", root)
+    val snap = IC.readEntries(spark, root)
+    assert(IC.filesOf(snap, "applog").nonEmpty, "no unflushed segment")
+    val df = graft.operators.SimilarityOps.indexSearch(
+      vecs.where(col("vec_id") === 0), root, "vec_id", "embedding",
+      k = 3, nProbe = 2)
+    val log = fileScans(df, "applog")
+    assert(log.size === 1, planOf(df))
+    val pushed = log.head.metadata.getOrElse("PushedFilters", "")
+    val inList = """In\(list_id, \[([^\]]*)\]""".r.findFirstMatchIn(pushed)
+    assert(inList.isDefined, s"applog scan lost its probe filter: $pushed")
+    val probed = inList.get.group(1).split(",").map(_.trim.toLong).toSet
+    assert(probed.size === 2)
+    assert(IC.partIdsOf(snap, "vectors").size > probed.size,
+      "fixture: every populated list is probed, nothing to prune")
+    val vec = fileScans(df, "vectors")
+    assert(vec.size === 1, planOf(df))
+    assert(scanFiles(vec.head) ===
+      IC.filesOfParts(snap, "vectors", probed).toSet,
+      s"vectors scan is not the probed lists' files: ${scanFiles(vec.head)}")
+  }
+
+  test("snapshot-planned BM25 search prunes: bm25SearchIndexed reads only" +
+      " the probed buckets' postings files and pushes In(term, ...)") {
+    import spark.implicits._
+    val IC = graft.sources.IndexCommits
+    val corpus = (0 until 40).map { i =>
+      (i.toLong, (0 until 6).map(j => s"t${(i * 5 + j * 11) % 97}")
+        .mkString(" ") + (if (i % 3 == 0) " spark join hash" else ""))
+    }.toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("graft_pi_bm")
+      .toString + "/idx"
+    graft.operators.TextOps.invertedIndexWrite(corpus, "doc_id", "text",
+      root, nBuckets = 16)
+    val terms = Seq("spark", "join", "hash")
+    val buckets = terms.map(t => java.lang.Math.floorMod(
+      graft.operators.TextOps.polyHashFn(t), 16L)).toSet
+    val snap = IC.readEntries(spark, root)
+    assert(IC.partIdsOf(snap, "postings").size > buckets.size,
+      "fixture: every bucket is probed, nothing to prune")
+    val df = graft.operators.TextOps.bm25SearchIndexed(spark, root,
+      terms, k = 5)
+    val post = fileScans(df, "postings")
+    assert(post.size === 1, planOf(df))
+    assert(scanFiles(post.head) ===
+      IC.filesOfParts(snap, "postings", buckets).toSet,
+      s"postings scan is not the probed buckets' files: " +
+        scanFiles(post.head))
+    val pushed = post.head.metadata.getOrElse("PushedFilters", "")
+    assert(pushed.contains("In(term,"),
+      s"postings scan lost its term filter: $pushed")
+  }
 }
